@@ -32,6 +32,21 @@ def histogram_expr(value: Column, vmin: Column, vmax: Column, nbins: int) -> Col
     return F.least(raw, F.lit(nbins - 1)).cast("long")
 
 
+def bin_index(value: Column, vmin: Column, vmax: Column, nbins: int) -> Column:
+    """:func:`histogram_expr`, except that every value (NULLs included)
+    lands in bin 0 when min == max — the degenerate one-value case."""
+    return F.when(vmax == vmin, F.lit(0).cast("long")).otherwise(
+        histogram_expr(value, vmin, vmax, nbins)
+    )
+
+
+def bin_edges(b: Column, vmin: Column, vmax: Column, nbins: int) -> tuple[Column, Column]:
+    """(bin_start, bin_end) of bin ``b``: ``vmin + b * width`` and
+    ``vmin + (b + 1) * width``."""
+    width = (vmax - vmin) / F.lit(nbins)
+    return vmin + b * width, vmin + (b + 1) * width
+
+
 def histogram(df: DataFrame, col: str, nbins: int = 10) -> DataFrame:
     """10-bin (default) equal-width histogram → (bin, bin_start, bin_end,
     n) rows, ordered by bin. Degenerate case min==max: all values in bin 0.
@@ -41,29 +56,20 @@ def histogram(df: DataFrame, col: str, nbins: int = 10) -> DataFrame:
     # The stats row is a 1-row DataFrame: cross-join (broadcast, free) so
     # the bin expression stays fully distributed — no driver round-trip.
     joined = df.select(c.alias("_v")).crossJoin(F.broadcast(stats))
-    width = (F.col("vmax") - F.col("vmin")) / F.lit(nbins)
     binned = joined.select(
-        F.when(
-            F.col("vmax") == F.col("vmin"), F.lit(0).cast("long")
-        )
-        .otherwise(histogram_expr(F.col("_v"), F.col("vmin"), F.col("vmax"), nbins))
-        .alias("bin"),
-        F.col("vmin"),
-        width.alias("_w"),
+        bin_index(F.col("_v"), F.col("vmin"), F.col("vmax"), nbins).alias("bin"),
+        "vmin",
+        "vmax",
     )
+    start, end = bin_edges(F.col("bin"), F.col("_vmin"), F.col("_vmax"), nbins)
     return (
         binned.groupBy("bin")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.first("vmin").alias("_vmin"),
-            F.first("_w").alias("_ww"),
+            F.first("vmax").alias("_vmax"),
         )
-        .select(
-            "bin",
-            (F.col("_vmin") + F.col("bin") * F.col("_ww")).alias("bin_start"),
-            (F.col("_vmin") + (F.col("bin") + 1) * F.col("_ww")).alias("bin_end"),
-            "n",
-        )
+        .select("bin", start.alias("bin_start"), end.alias("bin_end"), "n")
         .orderBy("bin")
     )
 

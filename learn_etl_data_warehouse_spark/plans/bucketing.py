@@ -46,7 +46,7 @@ reads one partition of each side with no shuffle at all.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -72,38 +72,3 @@ def write_bucketed(
         .sortBy(sort_cols[0], *sort_cols[1:])
         .saveAsTable(table)
     )
-
-
-def colocated_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on: list[str] | str,
-    how: str = "inner",
-) -> DataFrame:
-    """Join two bucketed catalog tables on their bucket key.
-
-    Pure declaration — when both tables are bucketed on ``on`` with the
-    same bucket count, Catalyst plans a SortMergeJoin with NO exchange
-    on either side (the test asserts it). No hints, no repartition: the
-    co-location is a property of the stored layout, which is the whole
-    point — the plan stays shuffle-free for every future query too."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
-
-
-def n_shuffle_exchanges(df: DataFrame) -> int:
-    """Count shuffle exchanges in the executed plan (AQE-resolved)."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-
-
-def selected_buckets(df: DataFrame) -> str | None:
-    """Return the scan's ``SelectedBucketsCount`` fragment, if bucket
-    pruning kicked in (e.g. ``'1 out of 8'``), else None."""
-    import re
-
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"SelectedBucketsCount: (\d+ out of \d+)", plan)
-    return m.group(1) if m else None

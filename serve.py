@@ -5,8 +5,9 @@ matplotlib histograms + HTML tables per quarter / per transport mode.
 Neither Flask nor matplotlib ship in this image, so this shim uses only
 the stdlib: ``http.server`` for routing and a ~40-line PNG writer for
 the charts. The ENGINE side is identical either way — every number that
-crosses the wire comes from ``plans/dashboard.py``'s partition-pruned
-DataFrames; this file only formats chart-sized rows.
+crosses the wire comes from ``plans/dashboard.py``'s ``collect_dashboard``
+(one fused plan per page); this file only formats chart-sized rows and
+logs each request's path, status and latency.
 
 Endpoints (mirroring the reference routes):
     GET /                      -> nav index (quarter + mode keys)
@@ -22,10 +23,24 @@ reference's sqlite export, then serves).
 from __future__ import annotations
 
 import html
+import logging
 import struct
 import sys
+import time
 import zlib
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+from learn_etl_data_warehouse_spark.plans.dashboard import (
+    MAX_TABLE_ROWS,
+    PAGES,
+    Counts,
+    Hist,
+    Nav,
+    collect_dashboard,
+    collect_each,
+)
+
+log = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
 # Minimal PNG bar chart (stdlib only)
@@ -98,26 +113,19 @@ def _table_html(title: str, rows: list[dict]) -> str:
     )
 
 
-MAX_TABLE_ROWS = 200  # edge guard: never stream an unbounded table
-
-
-def render_dashboard(kind: str, key: str, dash: dict) -> str:
-    """One dashboard dict (plans/dashboard.py) -> one HTML page. Chart
-    DataFrames are bin-sized; the raw table is capped at the edge."""
+def render_page(kind: str, key: str, rows: dict[str, list[dict]]) -> str:
+    """Collected chart rows (plans/dashboard.py) -> one HTML page."""
     parts = [f"<html><body><h1>{kind} {html.escape(key)}</h1>"]
-    for name, df in dash.items():
+    for name, chart_rows in rows.items():
         if name == "table":
-            rows = [r.asDict() for r in df.limit(MAX_TABLE_ROWS).collect()]
-            parts.append(_table_html(f"table (first {MAX_TABLE_ROWS})", rows))
+            parts.append(_table_html(f"table (first {MAX_TABLE_ROWS})", chart_rows))
         elif name.startswith("hist_"):
-            rows = [r.asDict() for r in df.collect()]
-            parts.append(_table_html(name, rows))
+            parts.append(_table_html(name, chart_rows))
             parts.append(f'<img src="/{kind}/{key}/{name}.png" alt="{name}">')
         elif name.startswith("geo_"):
-            rows = [r.asDict() for r in df.limit(50).collect()]
-            parts.append(_table_html(f"{name} (sample)", rows))
+            parts.append(_table_html(f"{name} (sample)", chart_rows))
         else:  # nav lists
-            keys = [str(r[0]) for r in df.collect()]
+            keys = [str(next(iter(r.values()))) for r in chart_rows]
             links = " | ".join(
                 f'<a href="/{"quarterly" if "quarter" in name else "mode"}/'
                 f'{k}">{html.escape(k)}</a>'
@@ -128,65 +136,77 @@ def render_dashboard(kind: str, key: str, dash: dict) -> str:
     return "".join(parts)
 
 
+def render_dashboard(kind: str, key: str, dash: dict) -> str:
+    """One dashboard dict of DataFrames, collected chart by chart, -> one
+    HTML page."""
+    return render_page(kind, key, collect_each(dash))
+
+
+def chart_png(rows: list[dict]) -> bytes | None:
+    """Collected histogram rows -> a PNG; None when there are no count
+    rows to draw."""
+    if not rows or "n" not in rows[0]:
+        return None
+    return bar_chart_png([int(r["n"]) for r in rows])
+
+
 def hist_png(dash: dict, chart: str) -> bytes | None:
     df = dash.get(chart)
     if df is None:
         return None
-    rows = [r.asDict() for r in df.collect()]
-    count_col = "n" if rows and "n" in rows[0] else None
-    if count_col is None:
-        return None
-    return bar_chart_png([int(r["n"]) for r in rows])
+    return chart_png([r.asDict() for r in df.collect()])
 
 
 # ---------------------------------------------------------------------------
 # HTTP shim
 # ---------------------------------------------------------------------------
 
+_NAV_CHARTS = [n for n, c in PAGES["quarterly"].charts.items() if isinstance(c, Nav)]
+
+
+def respond(cleaned, path: str) -> tuple[int, bytes, str]:
+    """Route one GET path to (status, body, content type). Every reply
+    comes from one ``collect_dashboard`` call: 5 Spark jobs for a page,
+    at most 4 for a chart, 2 for the nav index."""
+    parts = [p for p in path.split("/") if p]
+    if not parts:
+        rows = collect_dashboard(cleaned, "quarterly", "", _NAV_CHARTS)
+        return 200, render_page("quarterly", "", rows).encode(), "text/html"
+    if parts[0] not in PAGES or not 2 <= len(parts) <= 3:
+        return 404, b"not found", "text/plain"
+    kind, key = parts[0], parts[1]
+    if len(parts) == 2:
+        page = render_page(kind, key, collect_dashboard(cleaned, kind, key))
+        return 200, page.encode(), "text/html"
+    chart = parts[2].removesuffix(".png")
+    drawable = chart != parts[2] and isinstance(PAGES[kind].charts.get(chart), (Hist, Counts))
+    png = drawable and chart_png(collect_dashboard(cleaned, kind, key, [chart])[chart])
+    if not png:  # no such chart, or an empty partition
+        return 404, b"no such chart", "text/plain"
+    return 200, png, "image/png"
+
 
 def make_handler(cleaned):
-    """Handler closure over the cleaned fact DataFrame. Dashboard dicts
-    build lazily per request (partition-pruned filters); at scale this is
-    one pruned scan per chart, same plan the batch queries use."""
-    from learn_etl_data_warehouse_spark.plans.dashboard import (
-        mode_dashboard,
-        quarterly_dashboard,
-    )
-
-    builders = {"quarterly": quarterly_dashboard, "mode": mode_dashboard}
+    """Handler closure over the cleaned fact DataFrame. Every request
+    plans its page afresh over ``cleaned`` with ``respond``; each request
+    is logged with its path, status and latency."""
 
     class Handler(BaseHTTPRequestHandler):
-        def _send(self, code: int, body: bytes, ctype: str) -> None:
+        def do_GET(self) -> None:  # noqa: N802 (http.server API)
+            t0 = time.perf_counter()
+            try:
+                code, body, ctype = respond(cleaned, self.path)
+            except Exception as exc:  # edge shim: report, don't crash
+                log.exception("GET %s failed", self.path)
+                code, body, ctype = 500, str(exc).encode(), "text/plain"
             self.send_response(code)
             self.send_header("Content-Type", ctype)
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
             self.wfile.write(body)
+            log.info("GET %s %d %.3fs", self.path, code, time.perf_counter() - t0)
 
-        def do_GET(self) -> None:  # noqa: N802 (http.server API)
-            parts = [p for p in self.path.split("/") if p]
-            try:
-                if not parts:
-                    dash = builders["quarterly"](cleaned, "")
-                    navs = render_dashboard("quarterly", "", {
-                        k: v for k, v in dash.items() if k.startswith("nav_")
-                    })
-                    return self._send(200, navs.encode(), "text/html")
-                kind, key = parts[0], parts[1] if len(parts) > 1 else ""
-                if kind not in builders or not key:
-                    return self._send(404, b"not found", "text/plain")
-                dash = builders[kind](cleaned, key)
-                if len(parts) == 3 and parts[2].endswith(".png"):
-                    png = hist_png(dash, parts[2][: -len(".png")])
-                    if png is None:
-                        return self._send(404, b"no such chart", "text/plain")
-                    return self._send(200, png, "image/png")
-                page = render_dashboard(kind, key, dash)
-                return self._send(200, page.encode(), "text/html")
-            except Exception as exc:  # edge shim: report, don't crash
-                self._send(500, str(exc).encode(), "text/plain")
-
-        def log_message(self, *args) -> None:  # quiet for tests
+        def log_message(self, *args) -> None:  # requests are logged in do_GET
             pass
 
     return Handler
@@ -194,6 +214,7 @@ def make_handler(cleaned):
 
 def main() -> None:
     port = int(sys.argv[sys.argv.index("--port") + 1]) if "--port" in sys.argv else 8000
+    logging.basicConfig(level=logging.INFO, format="%(asctime)s %(message)s")
     from learn_etl_data_warehouse_spark.plans.warehouse import clean_fact
     from learn_etl_data_warehouse_spark.session import get_spark
     from learn_etl_data_warehouse_spark.sources.sqlite import read_sqlite_table

@@ -32,6 +32,68 @@ def spark():
     yield s
 
 
+def synthetic_cleaned_rows(n: int = 720) -> list[tuple]:
+    """Seeded rows shaped like ``clean_fact``'s output (the columns the
+    dashboards read), with the edge cases the dashboard plans must
+    survive: NULLs and a NaN in histogram columns, a column that is
+    all-NULL for one mode (SHOP distances), a one-value quarter (2019Q2:
+    min == max, a NULL amount included), NULL quarter and mode keys,
+    NULL end times, and trips that cross midnight."""
+    import random
+    from datetime import datetime, timedelta
+
+    rng = random.Random(20181001)
+    starts = {
+        "2018Q3": datetime(2018, 7, 1),
+        "2018Q4": datetime(2018, 10, 1),
+        "2019Q1": datetime(2019, 1, 1),
+    }
+    modes = ["BIKE", "CAR", "FOOD", "SHOP"]
+    rows = []
+    for i in range(n):
+        quarter = list(starts)[i % 3]
+        mode = modes[rng.randrange(4)]
+        start = starts[quarter] + timedelta(minutes=rng.randrange(90 * 24 * 60))
+        end = None if i % 17 == 0 else start + timedelta(minutes=rng.randrange(5, 240))
+        amount = None if i % 11 == 0 else float(rng.randrange(5, 60) * 500)
+        distance = None if mode == "SHOP" or i % 13 == 0 else rng.randrange(0, 30)
+        rows.append((f"T{i:05d}", quarter, mode, amount, distance, start, end))
+    rows[5] = rows[5][:3] + (float("nan"),) + rows[5][4:]
+    rows.append(("T90000", None, "BIKE", 9000.0, 3, datetime(2018, 8, 1, 10), None))
+    rows.append(("T90001", "2018Q4", None, 7000.0, 2, datetime(2018, 11, 1, 23), None))
+    one = datetime(2019, 4, 2, 8, 30)
+    for i, amount in enumerate([12000.0, None, 12000.0]):
+        rows.append((f"T9100{i}", "2019Q2", "CAR", amount, 4, one, one + timedelta(minutes=25)))
+    out = []
+    for id_, quarter, mode, amount, distance, start, end in rows:
+        duration = None if end is None else int((end - start).total_seconds() // 60)
+        merchant = None if mode in ("BIKE", "CAR") else f"M{len(out) % 7}"
+        lat, lng = -6.2 + (len(out) % 50) / 1000, 106.8 + (len(out) % 37) / 1000
+        out.append((
+            id_, quarter, mode, amount, distance, duration, start, end,
+            lat, lng, lat + 0.01, lng - 0.01, merchant,
+        ))
+    return out
+
+
+SYNTHETIC_CLEANED_SCHEMA = (
+    "id string, quarter string, mode string, amount_delivery double, "
+    "distance_rounded long, duration long, date_start timestamp, "
+    "date_end timestamp, from_lat double, from_lng double, to_lat double, "
+    "to_lng double, merchant_id string"
+)
+
+
+@pytest.fixture(scope="session")
+def synthetic_cleaned(spark):
+    """A small cleaned ojol fact that runs without the reference assets,
+    cached so scans skip the Python rows."""
+    df = spark.createDataFrame(synthetic_cleaned_rows(), SYNTHETIC_CLEANED_SCHEMA).cache()
+    df.count()
+    yield df
+    df.unpersist()
+
+
 @pytest.fixture(scope="session")
 def sf_small():
     return SF_SMALL
