@@ -222,9 +222,11 @@ def _bins(part: DataFrame, hists: dict, groups: list, schema) -> dict[str, list[
     bin)`` over the partition. Each chart's min/max, folded from the
     per-group stats, goes in as a literal of the column's own type, so
     ``bin_index``/``bin_edges`` compute exactly what :func:`histogram`
-    computes from its broadcast stats row."""
+    computes from its broadcast stats row. The edges of every chart are
+    picked by one CASE over the chart name, so they share one type:
+    double, for every non-decimal column."""
     b = F.col("bin")
-    per_chart, start, end = [], F, F
+    per_chart, start, end = [], F, F  # F.when opens each CASE, .when extends it
     for name, chart in hists.items():
         lo = [g[f"min_{name}"] for g in groups if g[f"min_{name}"] is not None]
         hi = [g[f"max_{name}"] for g in groups if g[f"max_{name}"] is not None]
